@@ -5,11 +5,17 @@
 #
 # Usage: scripts/precommit.sh [--test]
 #   (no args)  sbt Test/compile  — main + test sources must compile
-#   --test     additionally runs the full scalatest suite
+#   --test     additionally runs the full scalatest suite, compiles the
+#              perfbench harness against the engine (its own sbt build,
+#              which the root build never compiles, so a changed engine
+#              signature it calls would otherwise go unnoticed) and runs
+#              perfbench's python unit tests
 set -euo pipefail
 cd "$(dirname "$0")/.."
 sbt -batch Test/compile
 if [[ "${1:-}" == "--test" ]]; then
   sbt -batch test
+  (cd perfbench && sbt -batch Test/compile)
+  python3 -m unittest discover -s perfbench/tests
 fi
 echo "precommit: OK"

@@ -1,5 +1,10 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.SparkSession
+
 /**
  * Benchmark entry point (driver contract). Prints ONE JSON line:
  * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
@@ -88,8 +93,70 @@ object Bench {
     }
   }
 
+  /** The one timing discipline, shared with [[QBench]]: an untimed
+    * warm-up pass over `names` (JIT, codegen compilation and parquet
+    * footer caching excluded), then two timed passes, min per entry —
+    * a Verify JVM often runs right before the bench, and residual
+    * page-cache/CPU contention from its shutdown inflated single-pass
+    * totals ~3× in testing. Each entry is materialized by a `noop`
+    * write. Returns the per-entry seconds in `names` order and the
+    * entries that threw: a failed entry must be VISIBLE, not a silently
+    * fast one that deflates the total. */
+  private[graft] def timeEntries(spark: SparkSession, sfDir: String,
+      names: Seq[String], tag: String): (Seq[(String, Double)], Seq[String]) = {
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def run(name: String): Unit =
+      try inventory(name)(spark, sfDir)
+        .write.format("noop").mode("overwrite").save()
+      catch { case e: Throwable =>
+        failed += name
+        System.err.println(s"[$tag] $name FAILED: ${e.getMessage}")
+      }
+    names.foreach(run)
+    def timedPass(): Map[String, Double] = names.map { name =>
+      val t0 = System.nanoTime()
+      run(name)
+      name -> (System.nanoTime() - t0) / 1e9
+    }.toMap
+    val (p1, p2) = (timedPass(), timedPass())
+    (names.map(n => n -> math.min(p1(n), p2(n))), failed.toSeq)
+  }
+
+  /** Every unpartitioned window on the board runs over a frame BOUNDED
+    * before the window (top-k ranks, vocabulary/calendar-sized frames —
+    * audited in the r10 verdict), so WindowExec's single-partition
+    * warning is noise here: hundreds of repeats buried real warnings in
+    * the bench tail. Scoped to the bench JVMs only — Verify and user
+    * sessions keep the default so a genuinely unbounded window still
+    * announces itself where correctness work happens. */
+  private def quietWindowWarnings(): Unit =
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
+
+  // %.4f (0.1 ms resolution, Locale.ROOT): full double repr made the
+  // line ~5.4 kB and a ~2.7 kB stdout tail capture truncated it
+  // mid-map every round; sub-0.1 ms digits are pure noise at these
+  // scales anyway
+  private def f4(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
+
+  /** Correctness entries plus the bench-only timings (q41b ANN-only
+    * etc.) — everything the bench can time. */
+  private[graft] lazy val inventory = SparkEntry.queries ++ SparkEntry.benchExtra
+
+  /** `{"name":seconds,...}` in the given order, 4-dp seconds. */
+  private[graft] def secondsJson(times: Seq[(String, Double)]): String =
+    times.map { case (n, v) => "\"" + n + "\":" + f4(v) }.mkString("{", ",", "}")
+
+  private[graft] def namesJson(names: Iterable[String]): String =
+    names.map("\"" + _ + "\"").mkString("[", ",", "]")
+
+  private val json = new ObjectMapper()
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = GraftSession.cpus
     if (sys.env.get("SPARK_GRAFT_BENCH_PHASE").contains("core")) {
       corePhase(sfDir); return
     }
@@ -103,21 +170,10 @@ object Bench {
     // or any fork failure reverts to the pre-r12 single-JVM path.
     val childData = forkCorePhase(sfDir)
     val spark = GraftSession.build("graft-bench")
-    // Every unpartitioned window on the board runs over a frame BOUNDED
-    // before the window (top-k ranks, vocabulary/calendar-sized frames —
-    // audited in the r10 verdict), so WindowExec's single-partition
-    // warning is noise here: hundreds of repeats buried real warnings in
-    // the bench tail. Scoped to the bench JVM only — Verify and user
-    // sessions keep the default so a genuinely unbounded window still
-    // announces itself where correctness work happens.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    quietWindowWarnings()
 
-    // correctness inventory + bench-only timings (q41b ANN-only etc.);
     // core-24 and total_all sums below exclude the bench-only names so
-    // the headline stays comparable with every prior round's baseline
-    val inventory = SparkEntry.queries ++ SparkEntry.benchExtra
+    // the headline stays comparable with every prior round's baseline.
     // SPARK_GRAFT_BENCH_ORDER=reverse flips the execution order: an
     // entry whose time moves materially with order is measuring session
     // state (cache residue, warehouse side effects), not its operator —
@@ -131,41 +187,13 @@ object Bench {
       if (sys.env.get("SPARK_GRAFT_BENCH_ORDER").contains("reverse"))
         sortedNames.reverse
       else sortedNames
-    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
-    def run(name: String): Unit =
-      try inventory(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        // a failed query must be VISIBLE, not a silently fast entry that
-        // deflates the round-over-round total
-        failed += name
-        System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-      }
-
-    // Warm-up: one full untimed pass.
-    names.foreach(run)
-
-    // Two timed passes, min per query: the driver runs Verify's JVM right
-    // before this one, and residual page-cache/CPU contention from its
-    // shutdown inflated single-pass totals ~3× in testing.
-    def timedPass(): Map[String, Double] = names.map { name =>
-      val t0 = System.nanoTime()
-      run(name)
-      name -> (System.nanoTime() - t0) / 1e9
-    }.toMap
-    val (p1, p2) = (timedPass(), timedPass())
+    val (times, timedFailed) = timeEntries(spark, sfDir, names, "bench")
+    val failed = scala.collection.mutable.LinkedHashSet(timedFailed: _*)
     childData.foreach(c => failed ++= c.failed)
-    val results = (childData.map(_.times.toSeq).getOrElse(Nil) ++
-      names.map(n => n -> math.min(p1(n), p2(n)))).sortBy(_._1)
+    val results =
+      (childData.map(_.times.toSeq).getOrElse(Nil) ++ times).sortBy(_._1)
 
-    // %.4f (0.1 ms resolution, Locale.ROOT): full double repr made the
-    // line ~5.4 kB and the driver's tail capture (~2.7 kB) truncated it
-    // mid-map every round; sub-0.1 ms digits are pure noise at these
-    // scales anyway
-    def f4(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f4(v) }
-      .mkString("{", ",", "}")
+    val qs = secondsJson(results)
     val core = results.collect {
       case (k, v) if Core24.exists(k.startsWith) => v
     }.sum
@@ -180,17 +208,23 @@ object Bench {
     // FIRST on a clean heap (the reference's core job measured before
     // any board state exists).
     val eps = childData.map(_.eps).getOrElse(benchIngest(spark, 200000))
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val (baseName, baseTimes, baseFailed) = loadBaseline(sfDir)
+    val failedJson = namesJson(failed)
+    val baseline = readBaseline(sfDir)
+    val comparable = baseline.filter(comparableTo(_, sfDir, cpus))
+    val baseName = comparable.fold("none")(_.file)
+    val baseTimes = comparable.fold(Map.empty[String, Double])(_.times)
+    val baseFailed = comparable.fold(Set.empty[String])(_.failed)
     // a failed query (either round) records only its fail-fast time, so
     // its ratio would read as a absurd speedup/regression — omit it
-    val ratios = results.collect {
+    val ratioPairs = results.collect {
       case (k, v) if baseTimes.get(k).exists(_ > 0) &&
-          !failed.contains(k) && !baseFailed.contains(k) =>
-        // Locale.ROOT: default-locale %.3f can emit comma decimals
-        "\"" + k + "\":" + String.format(java.util.Locale.ROOT, "%.3f",
-          Double.box(v / baseTimes(k)))
-    }.mkString("{", ",", "}")
+          !failed.contains(k) && !baseFailed.contains(k) => k -> v / baseTimes(k)
+    }
+    // Locale.ROOT: default-locale %.3f can emit comma decimals
+    def f3(v: Double): String =
+      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    val ratios = ratioPairs.map { case (k, r) => "\"" + k + "\":" + f3(r) }
+      .mkString("{", ",", "}")
     // Full detail (per-query seconds + per-query ratios) goes ONLY to
     // self-written files: nine rounds of BENCH_r*.json show the driver's
     // tail capture truncates anything over ~2 kB mid-line, so a stdout
@@ -198,24 +232,29 @@ object Bench {
     // round). The files are the durable record; stdout carries a short
     // summary the capture window cannot cut.
     //
-    // r17 (verdict item 1): every run writes the round-stable
-    // BENCH_LAST_<sf>.json (plus a core-count-keyed copy, so a low-core
-    // scaling run cannot clobber the main record and per-query scaling
-    // stays readable); the committed BENCH_BASELINE_<sf>.json is now
-    // IMMUTABLE between explicit refreshes (SPARK_GRAFT_BASELINE_REFRESH=1)
-    // — the r16 driver run overwrote the baseline with its own 8-core
-    // numbers, which made that run's vs_baseline_median compare
-    // 8-core-now vs 32-core-now.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // Every run writes the core-count-keyed BENCH_LAST_<sf>_c<cpus>.json.
+    // The unkeyed BENCH_LAST_<sf>.json is the round-stable record read
+    // against the baseline, so it is written only at the
+    // baseline's core count (or with no baseline to match): a low-core
+    // scaling run must not clobber it with numbers from another core
+    // count. The committed BENCH_BASELINE_<sf>.json is IMMUTABLE between
+    // explicit refreshes (SPARK_GRAFT_BASELINE_REFRESH=1) — an r16
+    // bench run overwrote the baseline with its own 8-core numbers,
+    // which made that run's vs_baseline_median compare 8-core-now vs
+    // 32-core-now.
     val fullLine =
       s"""{"metric":"total","value":${f4(core)},"unit":"sec","queries":$qs,"total_all":${f4(all)},"ingest_eps":${eps.round},"failed":$failedJson,"baseline":"$baseName","vs_baseline":$ratios,"cpus":$cpus,"sf":"$sfDir"}"""
     // Filenames are SF-KEYED so a quick local sf0.01 sanity bench can
     // never clobber the canonical sf0.1 records.
+    val atBaselineCores = baseline.forall(_.cpus.forall(_ == cpus))
     val outFiles =
-      Seq(lastFileFor(sfDir), s"BENCH_LAST_${sfName(sfDir)}_c$cpus.json") ++
+      (if (atBaselineCores) Seq(lastFileFor(sfDir)) else Nil) ++
+        Seq(s"BENCH_LAST_${sfName(sfDir)}_c$cpus.json") ++
         (if (sys.env.get("SPARK_GRAFT_BASELINE_REFRESH").contains("1"))
            Seq(baselineFileFor(sfDir))
          else Nil)
+    if (!atBaselineCores)
+      System.err.println(s"[bench] ${lastFileFor(sfDir)} left as is: this run is $cpus cores, the baseline ${baseline.get.cpus.get}")
     outFiles.foreach { f =>
       try java.nio.file.Files.writeString(
         java.nio.file.Paths.get(f), fullLine + "\n")
@@ -225,17 +264,12 @@ object Bench {
     }
     // Median ratio vs the prior baseline: one number summarizes the
     // round-over-round drift the per-query map used to carry.
-    val ratioVals = results.collect {
-      case (k, v) if baseTimes.get(k).exists(_ > 0) &&
-          !failed.contains(k) && !baseFailed.contains(k) => v / baseTimes(k)
-    }.sorted
+    val ratioVals = ratioPairs.map(_._2).sorted
     val medianRatio =
       if (ratioVals.isEmpty) -1.0
       else if (ratioVals.size % 2 == 1) ratioVals(ratioVals.size / 2)
       else (ratioVals(ratioVals.size / 2 - 1) + ratioVals(ratioVals.size / 2)) / 2
-    val medianJson =
-      if (medianRatio < 0) "null"
-      else String.format(java.util.Locale.ROOT, "%.3f", Double.box(medianRatio))
+    val medianJson = if (medianRatio < 0) "null" else f3(medianRatio)
     // LAST stdout line, ~200 bytes: the driver's machine-readable contract.
     println(
       s"""{"metric":"total","value":${f4(core)},"unit":"sec","total_all":${f4(all)},"ingest_eps":${eps.round},"failed":$failedJson,"vs_baseline_median":$medianJson,"cpus":$cpus,"sf":"$sfDir"}""")
@@ -246,39 +280,17 @@ object Bench {
                                 failed: Set[String], eps: Double)
 
   /** Child-JVM entry (SPARK_GRAFT_BENCH_PHASE=core): ingest first on the
-    * clean heap, then the core-24 inventory with the parent's exact
-    * warm-up + min-of-two methodology; results land as one JSON line in
-    * the file named by SPARK_GRAFT_BENCH_PHASE_OUT. */
+    * clean heap, then the core-24 inventory through [[timeEntries]];
+    * results land as one JSON line in the file named by
+    * SPARK_GRAFT_BENCH_PHASE_OUT. */
   private def corePhase(sfDir: String): Unit = {
     val spark = GraftSession.build("graft-bench-core")
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-    val inventory = SparkEntry.queries ++ SparkEntry.benchExtra
+    quietWindowWarnings()
     val names = inventory.keys.toSeq.filter(n => Core24.exists(n.startsWith)).sorted
     val eps = benchIngest(spark, 200000)
-    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
-    def run(name: String): Unit =
-      try inventory(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        failed += name
-        System.err.println(s"[bench-core] $name FAILED: ${e.getMessage}")
-      }
-    names.foreach(run) // warm-up
-    def timedPass(): Map[String, Double] = names.map { name =>
-      val t0 = System.nanoTime()
-      run(name)
-      name -> (System.nanoTime() - t0) / 1e9
-    }.toMap
-    val (p1, p2) = (timedPass(), timedPass())
-    def f4(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
-    val qs = names.map(n => "\"" + n + "\":" + f4(math.min(p1(n), p2(n))))
-      .mkString("{", ",", "}")
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val (times, failed) = timeEntries(spark, sfDir, names, "bench-core")
     val line =
-      s"""{"phase":"core","ingest_eps":${eps.round},"queries":$qs,"failed":$failedJson,"sf":"$sfDir"}"""
+      s"""{"phase":"core","ingest_eps":${eps.round},"queries":${secondsJson(times)},"failed":${namesJson(failed)},"sf":"$sfDir"}"""
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(sys.env("SPARK_GRAFT_BENCH_PHASE_OUT")), line + "\n")
     spark.stop()
@@ -293,7 +305,6 @@ object Bench {
     try {
       val javaBin = java.nio.file.Paths
         .get(System.getProperty("java.home"), "bin", "java").toString
-      import scala.jdk.CollectionConverters._
       val jvmArgs = java.lang.management.ManagementFactory
         .getRuntimeMXBean.getInputArguments.asScala.toSeq
       val outFile = java.nio.file.Files.createTempFile("graft-bench-core", ".json")
@@ -310,20 +321,17 @@ object Bench {
       pb.redirectOutput(logFile.toFile)
       System.err.println(s"[bench] forked core phase (log: $logFile)")
       val rc = pb.start().waitFor()
-      val txt = new String(java.nio.file.Files.readAllBytes(outFile), "UTF-8")
-      java.nio.file.Files.deleteIfExists(outFile)
-      if (rc != 0 || !txt.contains("\"phase\":\"core\"")) {
+      val rec =
+        try json.readTree(outFile.toFile)
+        finally java.nio.file.Files.deleteIfExists(outFile)
+      if (rc != 0 || rec.path("phase").asText != "core") {
         System.err.println(s"[bench] core-phase fork failed (rc=$rc) — falling back to in-JVM; see $logFile")
         None
       } else {
-        val timeRe = """"(q\d{2}[a-z0-9_]*)":([0-9][0-9.Ee+-]*)""".r
-        val times = timeRe.findAllMatchIn(txt.split("\"failed\"", 2)(0))
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        val failedPart = txt.split("\"failed\"", 2).lift(1).getOrElse("")
-        val failed = """q\d{2}[a-z0-9_]*""".r
-          .findAllIn(failedPart.split("\\]", 2)(0)).toSet
-        val eps = """"ingest_eps":(\d+)""".r.findFirstMatchIn(txt)
-          .map(_.group(1).toDouble).getOrElse(-1.0)
+        val times = rec.path("queries").properties.asScala
+          .map(e => e.getKey -> e.getValue.asDouble).toMap
+        val failed = rec.path("failed").asScala.map(_.asText).toSet
+        val eps = rec.path("ingest_eps").asDouble(-1.0)
         if (times.isEmpty || eps <= 0) {
           System.err.println("[bench] core-phase result unparseable — falling back to in-JVM")
           None
@@ -335,18 +343,6 @@ object Bench {
     }
   }
 
-  /** Per-query seconds from the self-written `BENCH_BASELINE.json` (or
-    * `SPARK_GRAFT_BASELINE`, or — fallback for the first run after this
-    * scheme — the newest `BENCH_r*.json`), so every bench line carries a
-    * mechanical per-query ratio vs the previous round. The driver file
-    * nests the bench JSON line inside a "tail" string, so keys appear
-    * with escaped quotes — the regex accepts both forms. Guards (round-3
-    * advice: a truncated tail made ratios parse as seconds):
-    *  - the seconds regex only reads text BEFORE the "vs_baseline" key;
-    *  - no baseline at all when that prefix lacks the "queries" key
-    *    (the tail was cut mid-map, so the seconds are gone);
-    *  - no baseline when the recorded sf dir differs from this run's
-    *    (cross-sf ratios are meaningless). */
   private def sfName(sfDir: String): String =
     new java.io.File(sfDir).getName
 
@@ -358,63 +354,56 @@ object Bench {
   private def baselineFileFor(sfDir: String): String =
     s"BENCH_BASELINE_${sfName(sfDir)}.json"
 
-  /** Round-stable per-query record, rewritten by every run:
-    * `BENCH_LAST_sf0.1.json` (committed at round close so the driver
-    * can attribute per-query regressions — r16 verdict item 1). */
+  /** Round-stable per-query record, rewritten by every run at the
+    * baseline's core count: `BENCH_LAST_sf0.1.json` (committed at round
+    * close so per-query regressions can be attributed — r16 verdict
+    * item 1). */
   private def lastFileFor(sfDir: String): String =
     s"BENCH_LAST_${sfName(sfDir)}.json"
 
-  private def loadBaseline(sfDir: String): (String, Map[String, Double], Set[String]) = {
-    val roundNum = "BENCH_r(\\d+)\\.json".r
-    val file = sys.env.get("SPARK_GRAFT_BASELINE").map(new java.io.File(_))
-      .orElse(Some(new java.io.File(baselineFileFor(sfDir))).filter(_.isFile))
-      .orElse(Option(new java.io.File(".").listFiles()).getOrElse(Array.empty)
-        .flatMap(f => f.getName match {
-          // numeric round order: lexicographic puts r9 after r10
-          case roundNum(n) => Some((n.toInt, f))
-          case _ => None
-        }).sortBy(_._1).map(_._2).lastOption)
-      .filter(_.isFile)
-    file.flatMap { f =>
-      val txt = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      // seconds live in the "queries" map, which precedes "vs_baseline";
-      // scoping the scan there keeps ratios out even when keys repeat
-      val scoped = txt.split("vs_baseline", 2)(0)
-      val sfRe = """\\?"sf\\?":\\?"([^"\\]+)""".r
-      val recordedSf = sfRe.findAllMatchIn(txt).map(_.group(1)).toSeq.lastOption
-      // cross-core-count ratios are as meaningless as cross-sf ones (the
-      // r16 driver's 8-core run produced a 1.035 "median" against 32-core
-      // seconds); a baseline without the key predates the cpus field and
-      // is accepted as-is
-      val cpusRe = """\\?"cpus\\?":(\d+)""".r
-      val recordedCpus = cpusRe.findAllMatchIn(txt).map(_.group(1)).toSeq.lastOption
-      val nowCpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      if (!"""\\?"queries\\?":""".r.findFirstIn(scoped).isDefined) {
-        System.err.println(s"[bench] baseline ${f.getName} truncated before its queries map — skipping ratios")
+  /** A baseline bench record: per-query seconds, its failed entries and
+    * the sf dir and core count it ran at (absent in records that predate
+    * the field). */
+  private case class Baseline(file: String, sf: Option[String],
+      cpus: Option[Int], times: Map[String, Double], failed: Set[String])
+
+  /** The record in `SPARK_GRAFT_BASELINE`, else `BENCH_BASELINE_<sf>.json`;
+    * None when there is no such file or it holds no `queries` map. */
+  private def readBaseline(sfDir: String): Option[Baseline] = {
+    val f = new java.io.File(
+      sys.env.getOrElse("SPARK_GRAFT_BASELINE", baselineFileFor(sfDir)))
+    val rec =
+      if (!f.isFile) None
+      else try Some(json.readTree(f))
+      catch { case e: java.io.IOException =>
+        System.err.println(s"[bench] baseline ${f.getName} unreadable (${e.getMessage}) — skipping ratios")
         None
-      } else if (recordedSf.exists(_ != sfDir)) {
-        System.err.println(s"[bench] baseline ${f.getName} ran sf ${recordedSf.get}, this run is $sfDir — skipping ratios")
-        None
-      } else if (recordedCpus.exists(_ != nowCpus)) {
-        System.err.println(s"[bench] baseline ${f.getName} ran at ${recordedCpus.get} cores, this run is $nowCpus — skipping ratios")
+      }
+    rec.flatMap { r =>
+      if (!r.path("queries").isObject) {
+        System.err.println(s"[bench] baseline ${f.getName} has no queries map — skipping ratios")
         None
       } else {
-        val re = """\\?"(q\d{2}[a-z0-9_]*)\\?":([0-9][0-9.Ee+-]*)""".r
-        // FIRST occurrence per key, and only within the pre-vs_baseline
-        // prefix: belt and braces against ratio keys leaking in
-        val times = re.findAllMatchIn(scoped)
-          .foldLeft(Map.empty[String, Double]) { (acc, m) =>
-            if (acc.contains(m.group(1))) acc
-            else acc.updated(m.group(1), m.group(2).toDouble)
-          }
-        // the baseline round's own failed list (fail-fast times are not
-        // comparable); keys appear as bare or escaped-quote strings
-        val failedRe = """"failed\\?":\[([^\]]*)\]""".r
-        val baseFailed = failedRe.findFirstMatchIn(txt)
-          .map(m => """q\d{2}[a-z0-9_]*""".r.findAllIn(m.group(1)).toSet)
-          .getOrElse(Set.empty[String])
-        Some((f.getName, times, baseFailed))
+        def field[T](key: String)(get: JsonNode => T): Option[T] =
+          Option(r.get(key)).map(get)
+        Some(Baseline(f.getName, field("sf")(_.asText), field("cpus")(_.asInt),
+          r.path("queries").properties.asScala
+            .map(e => e.getKey -> e.getValue.asDouble).toMap,
+          r.path("failed").asScala.map(_.asText).toSet))
       }
-    }.getOrElse(("none", Map.empty[String, Double], Set.empty[String]))
+    }
   }
+
+  /** Per-query ratios need the same sf dir and the same core count:
+    * cross-sf ratios are meaningless, and so are cross-core ones (an
+    * 8-core r16 run produced a 1.035 "median" against 32-core
+    * seconds). */
+  private def comparableTo(b: Baseline, sfDir: String, cpus: Int): Boolean =
+    if (b.sf.exists(_ != sfDir)) {
+      System.err.println(s"[bench] baseline ${b.file} ran sf ${b.sf.get}, this run is $sfDir — skipping ratios")
+      false
+    } else if (b.cpus.exists(_ != cpus)) {
+      System.err.println(s"[bench] baseline ${b.file} ran at ${b.cpus.get} cores, this run is $cpus — skipping ratios")
+      false
+    } else true
 }

@@ -26,9 +26,19 @@ import org.apache.spark.sql.SparkSession
  *    cluster submissions set it per job (SCALE.md §10).
  */
 object GraftSession {
-  def build(appName: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    build(appName, s"local[$cpus]", cpus)
+  def build(appName: String): SparkSession =
+    build(appName, s"local[$cpus]", cpus.toString)
+
+  /** Local core count from `SPARK_GRAFT_CPUS` (default 4). It names the
+    * master, the shuffle partitions and every bench record and file, so
+    * anything but a positive integer fails here instead of reaching them. */
+  def cpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  private[graft] def parseCpus(raw: Option[String]): Int = raw match {
+    case None => 4
+    case Some(v) if v.matches("[1-9][0-9]{0,8}") => v.toInt
+    case Some(v) => throw new IllegalArgumentException(
+      s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'")
   }
 
   /** Single source of truth for session confs; tests call this with

@@ -3,9 +3,11 @@ package graft
 /**
  * Standalone per-query bench: `runMain graft.QBench <sfDir> <prefixes>`
  * runs just the named entries (comma-separated name prefixes, from
- * `queries` ++ `benchExtra`) in a fresh JVM — one warm-up pass, two
- * timed passes, min per query, the exact timing discipline of
- * [[Bench]] — and prints one JSON line.
+ * `queries` ++ `benchExtra`) in a fresh JVM through [[Bench.timeEntries]]
+ * — one warm-up pass, two timed passes, min per query, the exact timing
+ * discipline of [[Bench]] — and prints one JSON line (entries that threw
+ * are listed under `failed`). `QBench <sfDir> q75_,q75b` times the q75
+ * build and its stored-index probe alone.
  *
  * This is the isolated-A/B tool the round-12 verdict asked for: a
  * driver board pass times ~240 entries in one JVM, so any single
@@ -19,26 +21,11 @@ object QBench {
     require(args.length >= 2, "usage: QBench <sfDir> <prefix1,prefix2,...>")
     val (sfDir, prefixes) = (args(0), args(1).split(',').toSeq)
     val spark = GraftSession.build("graft-qbench")
-    val inventory = SparkEntry.queries ++ SparkEntry.benchExtra
-    val names = inventory.keys.toSeq.sorted
+    val names = Bench.inventory.keys.toSeq.sorted
       .filter(n => prefixes.exists(n.startsWith))
     require(names.nonEmpty, s"no entries match $prefixes")
-    def run(name: String): Unit =
-      inventory(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-    names.foreach(run) // warm-up
-    def timedPass(): Map[String, Double] = names.map { n =>
-      val t0 = System.nanoTime()
-      run(n)
-      n -> (System.nanoTime() - t0) / 1e9
-    }.toMap
-    val (p1, p2) = (timedPass(), timedPass())
-    def f4(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
-    val qs = names.sorted
-      .map(n => "\"" + n + "\":" + f4(math.min(p1(n), p2(n))))
-      .mkString("{", ",", "}")
-    println(s"""{"qbench":$qs,"sf_dir":"$sfDir"}""")
+    val (times, failed) = Bench.timeEntries(spark, sfDir, names, "qbench")
+    println(s"""{"qbench":${Bench.secondsJson(times)},"failed":${Bench.namesJson(failed)},"sf_dir":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -257,7 +257,7 @@ object Similarity {
    * stored index and join shape, probe side carries `1+flips` keys per
    * table. `flips = 0` is bit-identical to the single-probe path
    * (spec). Candidate sets are supersets of single-probe's, so recall
-   * is monotone in `flips` (spec). Measured ([[graft.MultiProbe]],
+   * is monotone in `flips` (spec). Measured (the `MultiProbe` main,
    * sf0.1, q41c's 500-probe load, recall@3 vs exact kNN):
    *
    *   - over-grown-bits regime t=32 b=8 (the third-decade shape):

@@ -68,7 +68,7 @@ object SlowLogTable {
 
   /** [[flatten]] with an explicit fingerprint expression — the knob the
     * SURVEY §7.4 ingest profile measures (real UDF vs identity column;
-    * see [[graft.FpProfile]] and SCALE.md §7). */
+    * the `FpProfile` main, SCALE.md §7). */
   def flatten(events: DataFrame, fingerprint: Column): DataFrame = {
     val timeCols = TimeKeys.map(k =>
       coalesce(element_at(col("timeMetrics"), k), lit(0.0)).as(k.toLowerCase))

@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.{CoreQueries, ExtQueries, QuerySpec}
+
 /** Pins the query registry behind [[SparkEntry]]: the correctness
   * surface (every entry carries DuckDB oracle SQL) and the bench-only
   * timings (no oracle) keep their sizes and stay disjoint. */
@@ -23,5 +25,17 @@ class RegistrySpec extends AnyFunSuite {
   test("15 bench-only entries, disjoint from the correctness surface") {
     assert(SparkEntry.benchExtra.size == 15)
     assert(SparkEntry.queries.keySet.intersect(SparkEntry.benchExtra.keySet).isEmpty)
+  }
+
+  test("names are unique across the core and extension lists") {
+    val names = (CoreQueries.queries ++ ExtQueries.queries).map(_.name)
+    assert(names.size == 297)
+    assert(names.distinct == names)
+  }
+
+  test("a registry with two equal names fails when built") {
+    val q = CoreQueries.queries.head
+    val e = intercept[IllegalArgumentException](QuerySpec.unique(Seq(q, q.copy(oracle = None))))
+    assert(e.getMessage.contains(q.name))
   }
 }
